@@ -244,7 +244,7 @@ PIPELINE_EXTRA_RUNS = ["t_corpus_pipeline", "t_training_pipeline"]
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     n_runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2")))
     _sweep_stale_scratch()
     scratch = _own_scratch()

@@ -304,7 +304,7 @@ OPERATOR_COVERAGE: dict[str, tuple[str, tuple[str, ...]]] = {
     "W1": ("withWatermark", ("tests/test_streaming.py::test_tumble_stream_equals_batch",)),
     "W2": ("event-time fallback chain", ("w_event_time_fallback",)),
     "W3": ("10s tumbling windows", ("w_tumble_10s_keyed",)),
-    "W5": ("applyInPandasWithState ValueState", ("tests/test_streaming.py::test_daily_unique_stream_equals_batch",)),
+    "W5": ("watermark-evicted dropDuplicates over a 1-day event-time window", ("tests/test_streaming.py::test_daily_unique_stream_equals_batch",)),
     "W6": ("event-time timers", ("tests/test_streaming.py::test_cep_jump_stream_equals_batch",)),
     "W7": ("watermark-bounded join state", ("tests/test_streaming_join.py::test_stream_stream_interval_join",)),
     "W8": ("CEP via SeqPattern evaluator", ("s_cep_jump", "s_cep_browse_buy", "tests/test_cep.py::test_pattern_stream_browse_buy_equals_batch")),

@@ -8,8 +8,9 @@ streaming-only machinery:
 - ``sources``  : replay/Kafka/CDC-envelope/socket readers (S1-S4, S6)
 - ``jobs``     : watermarked tumbling-window aggregation (W1-W3) and
                  memory-sink test execution
-- ``state``    : keyed-state operators via ``applyInPandasWithState``
-                 (W5 ValueState dedup, W6 timers, W8 CEP jump)
+- ``state``    : keyed-state operators (W5 daily dedup as a
+                 watermark-evicted ``dropDuplicates``; W6 timers, W8
+                 CEP jump via ``applyInPandasWithState``)
 - ``cep``      : generalized sequence-pattern evaluator (W8 as a
                  declared ``SeqPattern``, match + timeout sides)
 - ``sinks``    : kafka/upsert/jdbc/routed/console writers (K1-K6) and

@@ -1,11 +1,16 @@
-"""Keyed-state streaming operators via ``applyInPandasWithState``.
+"""Keyed-state streaming operators.
 
 Covers the reference's RichFunction/ValueState/CEP family:
 
 - W5 keyed ValueState + daily expiry → ``daily_unique_stream``
   (rt/app/dwd/log/DwdTrafficUniqueVisitorDetail.java:69-98: ValueState
-  holding last-seen date, 1-day TTL — here the state is *just* the
-  last date string, so TTL is implicit in the date-rollover test)
+  holding last-seen date, 1-day TTL). Here it runs entirely in the JVM:
+  a streaming ``dropDuplicates`` over (user, 1-day event-time window),
+  whose state row for a (user, day) is evicted once the watermark
+  passes the day's end — the TTL, decided by the watermark.
+- Cross-day keyed state (returning users, new-visitor correction) runs
+  on ``applyInPandasWithState``: it must remember a date across days,
+  which a dedup cannot express.
 - W6/W8 timers + CEP-with-timeout → ``cep_jump_stream``
   (rt/app/dwd/log/DwdTrafficUserJumpDetail.java:79-119: pattern
   "session start ``next`` session start ``within 10 s``", timeout
@@ -15,10 +20,11 @@ Covers the reference's RichFunction/ValueState/CEP family:
 Batch truth: ``flink_spark.plans.state`` (``s_daily_unique_users``,
 ``s_cep_jump``) — stream-batch equivalence is asserted in tests.
 
-Scale notes: state per key is O(1) (a date string / one event tuple),
-keys partition by hash across executors, and the watermark bounds both
-state lifetime and timer firing — the same properties the reference
-gets from keyed ValueState + TTL + event-time timers.
+Scale notes: state per key is O(1) (a (user, day) key / a date string
+/ one event tuple), keys partition by hash across executors, and the
+watermark bounds both state lifetime and timer firing — the same
+properties the reference gets from keyed ValueState + TTL + event-time
+timers.
 """
 
 from __future__ import annotations
@@ -28,47 +34,27 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupStateTimeout
 
-_DAILY_OUT = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("date_id", T.StringType()),
-    ]
-)
-_DAILY_STATE = T.StructType([T.StructField("last_date", T.StringType())])
-
 
 def daily_unique_stream(sdf: DataFrame, watermark: str = "2 seconds") -> DataFrame:
     """Emit (user_id, date_id) on each user's first event of a day.
 
-    ValueState = last-seen date only; a row is emitted when its date
-    is *later* than the stored one (events arrive per-key in event-time
-    order from the replay/Kafka source). Downstream ``groupBy(date_id)
-    .count()`` equals batch ``s_daily_unique_users``.
+    A streaming ``dropDuplicates`` over (user_id, 1-day tumbling window
+    of ``ts``): the first event of a (user, day) passes, later ones are
+    dropped, whatever order they arrive in within the watermark delay.
+    The window column carries the watermark, so Spark evicts each
+    (user, day) state row once the watermark passes the day's end —
+    the reference's 1-day TTL, with no Python worker. Day boundaries
+    are UTC midnights, matching ``date_id`` because the session pins
+    UTC. Downstream ``groupBy(date_id).count()`` equals batch
+    ``s_daily_unique_users``.
     """
-
-    def fn(key, pdfs, state):
-        import pandas as pd
-
-        if state.hasTimedOut:  # pragma: no cover - no timeout configured
-            state.remove()
-            return
-        last = state.get[0] if state.exists else None
-        out = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for d in pdf["ts"].dt.strftime("%Y-%m-%d"):
-                if last is None or d > last:
-                    out.append((key[0], d))
-                    last = d
-        state.update((last,))
-        if out:
-            yield pd.DataFrame(out, columns=["user_id", "date_id"])
-
     return (
         sdf.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn, _DAILY_OUT, _DAILY_STATE, "append", GroupStateTimeout.NoTimeout
+        .select("user_id", F.window("ts", "1 day").alias("day"))
+        .dropDuplicates(["user_id", "day"])
+        .select(
+            "user_id",
+            F.date_format(F.col("day.start"), "yyyy-MM-dd").alias("date_id"),
         )
     )
 

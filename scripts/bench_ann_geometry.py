@@ -53,7 +53,7 @@ def main() -> None:
     from flink_spark.registry import release_persisted
     from flink_spark.session import get_spark
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     spark = get_spark(app_name="ann-geometry", cpus=cpus,
                       shuffle_partitions=cpus)
     sf = args.sf_dir

@@ -52,7 +52,7 @@ def main() -> None:
     )
 
     assert (STORE_BUCKETS > 0) == (mode == "bucketed")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     spark = get_spark(app_name=f"store-bucketing-{mode}", cpus=cpus,
                       shuffle_partitions=cpus)
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")

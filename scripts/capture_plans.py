@@ -24,7 +24,7 @@ def main() -> None:
     assert suffix in ("before", "after"), suffix
     names = sys.argv[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
 
     from bench import HEADLINE
     from flink_spark.registry import release_persisted, spark_queries

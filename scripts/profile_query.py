@@ -34,7 +34,7 @@ def _rest(base: str, path: str):
 def main() -> None:
     names = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
 
     from pyspark.sql import SparkSession
 

@@ -85,6 +85,42 @@ def test_cache_serves_second_request(server):
         assert status == 200 and len(body["data"]) > 0
 
 
+def test_cache_runs_each_query_once_across_routes(spark, monkeypatch):
+    """Routes that share a catalog query share its cached rows: three
+    routes over ads_province_stats run it once, each shaped its own way."""
+    import dataclasses
+
+    import flink_spark.serving as serving
+
+    calls: dict[str, int] = {}
+
+    def counted(name, fn):
+        def run(*a, **kw):
+            calls[name] = calls.get(name, 0) + 1
+            return fn(*a, **kw)
+
+        return run
+
+    wrapped = {
+        n: dataclasses.replace(q, fn=counted(n, q.fn))
+        for n, q in all_queries().items()
+    }
+    monkeypatch.setattr(serving, "all_queries", lambda: wrapped)
+    srv = serve(spark, SF_DIR, port=0)
+    t = threading.Thread(target=srv.serve_forever, daemon=True)
+    t.start()
+    try:
+        base = f"http://127.0.0.1:{srv.server_address[1]}"
+        _, total = _get(base, "/gmall/realtime/trade/total")
+        _, ct = _get(base, "/gmall/realtime/trade/provinceOrderCt")
+        _, gmv = _get(base, "/gmall/realtime/gmv")
+    finally:
+        srv.shutdown()
+    assert calls == {"ads_province_stats": 1}
+    assert gmv["data"] == total["data"]
+    assert len(ct["data"]) > 0
+
+
 def test_route_count_covers_publisher_surface():
     """pub22 exposes 22 controller routes; the shim must map them all."""
     assert len(ENDPOINTS) >= 22

@@ -325,12 +325,55 @@ def test_topn_per_window_stream_equals_batch(spark, tmp_path):
 
 def test_daily_unique_stream_equals_batch(spark, tmp_path):
     sdf = replay_events(spark, SF_DIR, str(tmp_path / "replay"), slices=5)
-    detail = run_to_memory(daily_unique_stream(sdf), "daily_mem")
+    q = (
+        daily_unique_stream(sdf).writeStream.format("memory")
+        .queryName("daily_mem").outputMode("append")
+        .trigger(availableNow=True).start()
+    )
+    q.awaitTermination()
+    detail = spark.table("daily_mem")
     uv = detail.groupBy("date_id").agg(F.countDistinct("user_id").alias("uv"))
     batch = _Q["s_daily_unique_users"].fn(spark, SF_DIR)
     assert _rows(uv) == _rows(batch)
     # detail rows are already unique per (user, day) — emitted once
     assert detail.count() == detail.select("user_id", "date_id").distinct().count()
+    # the watermark expires closed days' keys (the reference's 1-day
+    # TTL): state holds at most the latest day's users, not one row
+    # per user ever seen
+    held = q.lastProgress["stateOperators"][0]["numRowsTotal"]
+    latest = detail.agg(F.max("date_id")).collect()[0][0]
+    latest_users = detail.filter(F.col("date_id") == latest).count()
+    all_users = detail.select("user_id").distinct().count()
+    assert held <= latest_users < all_users
+
+
+def test_daily_unique_stream_late_event_before_midnight(spark, tmp_path):
+    """A day-1 event arriving after day-2 events, inside the watermark
+    delay, still counts for day 1 (an order-dependent "date later than
+    the stored one" test drops it and undercounts COUNT(DISTINCT))."""
+    import pandas as pd
+
+    src = tmp_path / "late"
+    src.mkdir()
+    schema = "event_id long, ts timestamp, user_id long"
+    slices = [
+        [(1, "2024-01-02 00:00:00.5", 1), (2, "2024-01-02 00:00:00.6", 2)],
+        [(3, "2024-01-01 23:59:59.5", 1)],
+    ]
+    for i, rows in enumerate(slices):
+        pdf = pd.DataFrame(rows, columns=["event_id", "ts", "user_id"])
+        pdf["ts"] = pd.to_datetime(pdf["ts"])
+        pdf.to_parquet(src / f"{i:04d}.parquet", index=False,
+                       coerce_timestamps="us")
+    sdf = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src))
+    )
+    out = run_to_memory(daily_unique_stream(sdf), "daily_late_mem")
+    assert set(_rows(out)) == {
+        (1, "2024-01-01"), (1, "2024-01-02"), (2, "2024-01-02"),
+    }
 
 
 def test_is_new_correction_equals_batch(spark, tmp_path):
