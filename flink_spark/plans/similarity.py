@@ -692,11 +692,9 @@ COSDUP_THRESHOLD = 0.45
 # Leakage-safe split clustering threshold for the embedding modality,
 # decoupled from the dedup threshold (round 10, mirroring textops'
 # SPLIT_JACCARD): split assignment may cluster at a LOWER cosine than
-# removal. Env-pinned, read once at import so the Spark plan and the
-# generated DuckDB oracle always agree; defaults to the dedup value.
-SPLIT_COSINE = float(
-    os.environ.get("FLINK_SPARK_SPLIT_COSINE", str(COSDUP_THRESHOLD))
-)
+# removal. Both the Spark plan and the generated DuckDB oracle read
+# this constant, so they always agree; it equals the dedup value.
+SPLIT_COSINE = COSDUP_THRESHOLD
 
 
 _EMB_COSINE_SQL = f"{_dot_sql('x.embedding', 'y.embedding')} / (x.nrm * y.nrm)"
@@ -1264,11 +1262,10 @@ def e_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     is shared with ``e_dup_clusters``; the split itself is a row-local
     left join + map + one map-side-combined aggregate.
 
-    Clustering threshold: ``SPLIT_COSINE`` (env
-    ``FLINK_SPARK_SPLIT_COSINE``), defaulted to the dedup threshold
-    but decoupled — split assignment may cluster at a lower cosine
-    than removal (see ``t_leakage_safe_split_loose`` for the
-    exercised loose-threshold twin on the text modality).
+    Clustering threshold: ``SPLIT_COSINE``, equal to the dedup
+    threshold but a separate constant — split assignment may cluster
+    at a lower cosine than removal (see ``t_leakage_safe_split_loose``
+    for the exercised loose-threshold twin on the text modality).
     """
     pairs = track_persist(
         _emb_neardup_pairs(spark, sf_dir, SPLIT_COSINE).select("d1", "d2"),
@@ -2890,11 +2887,11 @@ def quantization_objective(
 # a 100 TB float corpus is ~1.6 TB, so the brute-force ADC pass scans
 # two orders of magnitude less I/O than `e_cosine_topk` while the
 # float vectors stay cold in object storage for the final re-rank.
-# M and K are dimension/accuracy knobs, not corpus-size knobs (the
+# M and K are dimension/accuracy settings, not corpus-size ones (the
 # code length per vector does not depend on N), so they are plain
-# constants with env pins — no corpus-derived rule needed.
-PQ_M = int(os.environ.get("FLINK_SPARK_PQ_M", "8"))
-PQ_K = int(os.environ.get("FLINK_SPARK_PQ_K", "16"))
+# constants — no corpus-derived rule needed.
+PQ_M = 8
+PQ_K = 16
 PQ_DSUB = DIM // PQ_M
 assert PQ_M * PQ_DSUB == DIM, "PQ_M must divide the embedding width"
 # ADC shortlist size for the exact re-rank stage: a CONSTANT per query
@@ -3389,7 +3386,7 @@ def e_ivfpq_topk(spark: SparkSession, sf_dir: str, *,
 # --------------------------------------------------------------------------
 
 SQ_LEVELS = 255  # int8 code range 0..255 per dimension
-SQ_RERANK = int(os.environ.get("FLINK_SPARK_SQ_RERANK", "20"))
+SQ_RERANK = 20
 
 # per-dim corpus min/max as one broadcastable row — the SQ codebook
 _SQ_STATS_CTE = (
@@ -3815,11 +3812,11 @@ def e_ann_variant_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     leg per-query. This query runs all five production paths and the
     brute-force truth in one plan and reports corpus-level hits and
     recall per variant — the table that says which shortcut is safe
-    for a given recall budget AT THE ACTIVE knob settings (each leg
-    responds to its own env dials, and the oracle composes each
-    variant's registered SQL verbatim, so the scoreboard re-derives
-    whatever the production chains would do). Recall is an exact
-    integer ratio — bit-exact compare.
+    for a given recall budget AT THE ACTIVE settings (each leg derives
+    its own sizing, and the oracle composes each variant's registered
+    SQL verbatim, so the scoreboard re-derives whatever the production
+    chains would do). Recall is an exact integer ratio — bit-exact
+    compare.
 
     Cost shape: the composition of the six queries it audits, each
     with its documented scale story; the scoreboard itself adds five
@@ -3902,12 +3899,8 @@ def e_ann_variant_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pinned by the ordered union below, so results are unchanged.
     from concurrent.futures import ThreadPoolExecutor
 
-    workers = int(os.environ.get("FLINK_SPARK_LEG_THREADS", "3"))
-    if workers <= 1:
-        legs = [build_leg(n) for n in _ANN_VARIANTS]
-    else:
-        with ThreadPoolExecutor(max_workers=workers) as pool:
-            legs = list(pool.map(build_leg, _ANN_VARIANTS))
+    with ThreadPoolExecutor(max_workers=3) as pool:
+        legs = list(pool.map(build_leg, _ANN_VARIANTS))
     out = None
     for leg in legs:
         out = leg if out is None else out.unionByName(leg)

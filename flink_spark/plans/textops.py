@@ -65,7 +65,7 @@ DF_CAP = 100           # drop shingles appearing in >100 docs (stop-shingle filt
 # hash_quota_heads: skip the phase-2 refinement count when the quota
 # boundary bucket already fits a comfortable single-task sort — the
 # n/65536 sliver target; the refinement only pays for itself above it
-MIX_SLIVER_MAX = int(os.environ.get("FLINK_SPARK_MIX_SLIVER", "65536"))
+MIX_SLIVER_MAX = 65536
 JACCARD_THRESHOLD = 0.8
 MINHASHES = 16         # 16 hashes = 4 bands x 4 rows
 LSH_BANDS = 4
@@ -74,17 +74,12 @@ LSH_BANDS = 4
 # similarity for split ASSIGNMENT than for REMOVAL — near-copies
 # (>= JACCARD_THRESHOLD) are deleted outright, while paraphrase-level
 # pairs below it should still be forbidden from straddling train/val.
-# Env-pinned like the other knobs; the default keeps the split keyed
-# on the same pair graph as dedup (the r9 behavior), and the module
-# reads it ONCE at import so the Spark plan and the generated DuckDB
-# oracle always agree. ``t_leakage_safe_split_loose`` exercises the
-# loose value as a first-class catalog query.
-SPLIT_JACCARD = float(
-    os.environ.get("FLINK_SPARK_SPLIT_JACCARD", str(JACCARD_THRESHOLD))
-)
-LOOSE_SPLIT_JACCARD = float(
-    os.environ.get("FLINK_SPARK_SPLIT_JACCARD_LOOSE", "0.5")
-)
+# The split keys on the same pair graph as dedup (the r9 behavior);
+# both the Spark plan and the generated DuckDB oracle read these
+# constants, so they always agree. ``t_leakage_safe_split_loose``
+# exercises the loose value as a first-class catalog query.
+SPLIT_JACCARD = JACCARD_THRESHOLD
+LOOSE_SPLIT_JACCARD = 0.5
 # SimHash width is the corpus-size knob for the hamming-band self-join:
 # candidates per chunk scale with (n_docs / 2^chunk_bits)^2, so the
 # signature must widen as the corpus grows (rule of thumb: chunk_bits
@@ -2595,11 +2590,10 @@ def t_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost, and a real pipeline reuses the labels it already computed
     for dedup.
 
-    The clustering threshold is ``SPLIT_JACCARD`` (env
-    ``FLINK_SPARK_SPLIT_JACCARD``), DEFAULTED to the dedup threshold
-    but decoupled from it: split assignment may cluster looser than
-    removal. ``t_leakage_safe_split_loose`` runs the same operator at
-    the pinned loose value.
+    The clustering threshold is ``SPLIT_JACCARD``, equal to the dedup
+    threshold but a separate constant: split assignment may cluster
+    looser than removal. ``t_leakage_safe_split_loose`` runs the same
+    operator at the loose value.
     """
     return _leakage_split_audit(
         _leakage_split_tagged(spark, sf_dir, SPLIT_JACCARD)
@@ -2615,9 +2609,8 @@ def t_leakage_safe_split_loose(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``t_leakage_safe_split`` at the PARAPHRASE-level threshold.
 
     Dedup removes near-copies at jaccard >= {JACCARD_THRESHOLD}; this
-    twin clusters the split assignment at
-    {LOOSE_SPLIT_JACCARD} (env ``FLINK_SPARK_SPLIT_JACCARD_LOOSE``) —
-    the eval-integrity stance that a pair too dissimilar to DELETE can
+    twin clusters the split assignment at {LOOSE_SPLIT_JACCARD} — the
+    eval-integrity stance that a pair too dissimilar to DELETE can
     still be similar enough to CONTAMINATE a held-out set, so it must
     not straddle train/val. Candidate generation is unchanged (same
     MinHash banding — at 4x4 bands the collision rate at jaccard 0.5
@@ -4548,9 +4541,9 @@ def table_profile(
     sf_dir: str,
     table: str = "documents",
     columns: tuple[str, ...] = _PROFILE_COLS,
-    exact_distinct: bool | None = None,
+    exact_distinct: bool = True,
 ) -> DataFrame:
-    """Single-pass per-column profile; the distinct strategy is a KNOB.
+    """Single-pass per-column profile with exact or sketched distincts.
 
     ``exact_distinct=True`` → ``countDistinct``: Catalyst plans the N
     per-column distincts via Expand (N× row multiplication through one
@@ -4560,16 +4553,10 @@ def table_profile(
     one partial-aggregated scan — the production setting at 100 TB,
     where the Expand multiplier is the dominant cost (measured at the
     1000× decade in SCALING.md: the approx profile removes the Expand
-    cliff). ``None`` (default) resolves the env knob
-    ``FLINK_SPARK_PROFILE_EXACT`` (default exact, same resolution
-    discipline as the LSH knobs; the approx form is deliberately NOT
+    cliff). The default is exact; the approx form is deliberately NOT
     oracle-compared — HLL layouts differ across engines, like
-    ``a_approx_sketch_daily``).
+    ``a_approx_sketch_daily``.
     """
-    if exact_distinct is None:
-        exact_distinct = (
-            os.environ.get("FLINK_SPARK_PROFILE_EXACT", "1") != "0"
-        )
     nd = F.countDistinct if exact_distinct else F.approx_count_distinct
     docs = load(spark, sf_dir, table)
     aggs = [F.count(F.lit(1)).alias("row_ct")]
@@ -4637,12 +4624,11 @@ def t_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     unpivots the 1×25 result row into the long form. The Expand
     multiplier is the price of EXACT distincts — the catalog pins the
     exact form so the oracle compares stay exact; ``table_profile``
-    exposes the strategy as a parameter/env knob
-    (``FLINK_SPARK_PROFILE_EXACT=0`` → single-pass HLL, no Expand —
-    the production setting at 100 TB, measured in SCALING.md). Min/max
-    compare in the native type (numeric for BIGINT columns) and cast
-    to string only in the output, so the ordering is semantic, not
-    lexicographic.
+    exposes the strategy as a parameter (``exact_distinct=False`` →
+    single-pass HLL, no Expand — the production setting at 100 TB,
+    measured in SCALING.md). Min/max compare in the native type
+    (numeric for BIGINT columns) and cast to string only in the
+    output, so the ordering is semantic, not lexicographic.
     """
     return table_profile(spark, sf_dir, exact_distinct=True)
 

@@ -26,7 +26,6 @@ engine along SURVEY §7.5's LLM-pipeline axis.
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -35,16 +34,13 @@ from flink_spark.functions.text import tokenize
 from flink_spark.registry import query
 from flink_spark.sources import local_df, load, table_rows
 
-# --- global-shuffle knobs (derived, oracle-symmetric — the pack/LSH
+# --- global-shuffle sizing (derived, oracle-symmetric — the pack/LSH
 # pattern: same corpus ⇒ same shard count in both engines) ---
 
-_SHUF_SHARDS_ENV = os.environ.get("FLINK_SPARK_SHUFFLE_SHARDS")
 # ~1M docs per shard ≈ one task's comfortable sort (same budget as
 # PACK_SHARD_ROWS); floor of 8 keeps the interleave metric meaningful
 # on fixture corpora, cap matches PACK_MAX_SHARDS.
-SHUFFLE_SHARD_ROWS = int(
-    os.environ.get("FLINK_SPARK_SHUFFLE_SHARD_ROWS", "1000000")
-)
+SHUFFLE_SHARD_ROWS = 1_000_000
 SHUFFLE_MIN_SHARDS = 8
 SHUFFLE_MAX_SHARDS = 4096
 
@@ -58,20 +54,15 @@ def shuffle_shards_for(n: int) -> int:
 
 
 def _active_shuffle_shards(spark: SparkSession, sf_dir: str) -> int:
-    if _SHUF_SHARDS_ENV:
-        return int(_SHUF_SHARDS_ENV)
     return shuffle_shards_for(table_rows(spark, sf_dir, "documents"))
 
 
-if _SHUF_SHARDS_ENV:
-    _SHUF_CTE = f"sh(shards) AS (SELECT {int(_SHUF_SHARDS_ENV)})"
-else:
-    _SHUF_CTE = (
-        f"sh(shards) AS (SELECT LEAST({SHUFFLE_MAX_SHARDS}, "
-        f"GREATEST({SHUFFLE_MIN_SHARDS}, "
-        f"CAST(ceil(COUNT(*) / {SHUFFLE_SHARD_ROWS}.0) AS BIGINT))) "
-        "FROM documents)"
-    )
+_SHUF_CTE = (
+    f"sh(shards) AS (SELECT LEAST({SHUFFLE_MAX_SHARDS}, "
+    f"GREATEST({SHUFFLE_MIN_SHARDS}, "
+    f"CAST(ceil(COUNT(*) / {SHUFFLE_SHARD_ROWS}.0) AS BIGINT))) "
+    "FROM documents)"
+)
 
 
 @query(
@@ -163,17 +154,17 @@ _TOKS = toks_sql("text")
 
 # Merge-table size. 24 rounds is enough to surface real subword
 # structure on the fixture corpus while keeping the iterative query
-# inside a correctness-gate budget; production training passes
-# thousands via the env knob (each round is one small pair-count job
-# over the bounded vocab, so rounds scale linearly and independently
-# of corpus size).
-BPE_MERGES = int(os.environ.get("FLINK_SPARK_BPE_MERGES", "24"))
+# inside a correctness-gate budget; production training runs
+# thousands of rounds (each round is one small pair-count job over the
+# bounded vocab, so rounds scale linearly and independently of corpus
+# size).
+BPE_MERGES = 24
 # Weighted-vocab cap: BPE statistics are dominated by frequent words;
 # capping to the top-V words by count (HF tokenizers' min_frequency
 # analog) bounds every training round at O(V) rows regardless of
 # corpus size. The CAP is computed distributed (TakeOrdered over the
 # full word-count table); only the bounded vocab iterates.
-BPE_VOCAB_WORDS = int(os.environ.get("FLINK_SPARK_BPE_VOCAB", "20000"))
+BPE_VOCAB_WORDS = 20000
 
 
 def _fold_sql(s: str, lft: str, rgt: str) -> str:

@@ -104,12 +104,9 @@ def load_spread(
     skipped entirely and this IS ``load()``. Aggregation-only readers
     (token stats, percentiles) keep plain ``load()``: their scan work
     is trivial and the exchange would be pure cost — measured both
-    ways in OPTIMIZATION_r14.md. ``FLINK_SPARK_SPREAD_SCAN=0`` pins
-    the old single-task behavior for A/B runs.
+    ways in OPTIMIZATION_r14.md.
     """
     base = load(spark, sf_dir, name)
-    if os.environ.get("FLINK_SPARK_SPREAD_SCAN", "1") == "0":
-        return base
     # `key` is part of the identity: two callers spreading the same table
     # on different keys must not share a handle partitioned on whichever
     # ran first.
@@ -117,8 +114,7 @@ def load_spread(
     cached = _DF_CACHE.get(ck)
     if cached is not None and cached.sparkSession is spark:
         return cached
-    # Spread width: ``FLINK_SPARK_SPREAD_PARTS`` pins it for A/B runs;
-    # default derives from the input size (``spread_width``). The
+    # Spread width derives from the input size (``spread_width``). The
     # repartition is skipped once the scan is already that wide (the
     # at-scale case), so the derivation only matters for small inputs.
     n = spread_width(spark, sf_dir, name, cpu_factor)
@@ -129,6 +125,10 @@ def load_spread(
     )
     _DF_CACHE[ck] = df
     return df
+
+
+# Input bytes per spread task (see ``spread_width``).
+SPREAD_TARGET_BYTES = 64 * 1024
 
 
 def spread_width(spark: SparkSession, sf_dir: str, name: str,
@@ -142,19 +142,14 @@ def spread_width(spark: SparkSession, sf_dir: str, name: str,
     over the ten spread-reader queries vs 32 tasks), because a tiny
     input sliced into one task per core pays more per-task fixed cost
     (scheduling + Arrow/python handshake) than the extra cores return.
-    The 64 KB/task default target (env
-    ``FLINK_SPARK_SPREAD_TARGET_BYTES``) reproduces that optimum and
-    saturates to the core count by ~2 MB of input — any real corpus —
-    and at genuine scale the repartition is skipped entirely (the scan
-    is already wider), so the constant cannot mis-size a 100 TB run.
+    The 64 KB/task target (``SPREAD_TARGET_BYTES``) reproduces that
+    optimum and saturates to the core count by ~2 MB of input — any
+    real corpus — and at genuine scale the repartition is skipped
+    entirely (the scan is already wider), so the constant cannot
+    mis-size a 100 TB run.
     """
     import math
 
-    pinned = int(os.environ.get("FLINK_SPARK_SPREAD_PARTS", "0"))
-    if pinned:
-        return pinned
-    target = int(os.environ.get("FLINK_SPARK_SPREAD_TARGET_BYTES",
-                                str(64 * 1024)))
     cores = spark.sparkContext.defaultParallelism
     try:
         sz = os.path.getsize(os.path.join(sf_dir, f"{name}.parquet"))
@@ -167,7 +162,8 @@ def spread_width(spark: SparkSession, sf_dir: str, name: str,
     # eight chain-audit queries ran 24.4 s vs 20.5 s at full core
     # width (r15 A/B), while the light readers ran 20% FASTER narrow —
     # so the density, not the byte count, decides.
-    return max(1, min(cores, math.ceil(sz * cpu_factor / target)))
+    return max(1, min(cores,
+                      math.ceil(sz * cpu_factor / SPREAD_TARGET_BYTES)))
 
 
 def local_df(spark: SparkSession, rows, schema: str) -> DataFrame:

@@ -293,18 +293,11 @@ def _resolve_dead_holes(
     alive: list[int] = []
     cdir = os.path.join(table, _CHANGELOG)
     for ep in missing:
-        dirs = [
-            d
-            for d in (
-                os.path.join(cdir, _epoch_dir(ep)),
-                os.path.join(cdir, f"e{ep}"),  # pre-padding legacy name
-            )
-            if os.path.isdir(d)
-        ]
-        if not dirs:
+        d = os.path.join(cdir, _epoch_dir(ep))
+        if not os.path.isdir(d):
             continue  # unresolvable: nothing on disk can deliver it
         try:
-            if spark.read.parquet(*dirs).limit(1).count() == 0:
+            if spark.read.parquet(d).limit(1).count() == 0:
                 continue  # verifiably empty epoch: nothing to fold
         except Exception:
             pass  # unreadable (e.g. no parquet footer yet): keep waiting

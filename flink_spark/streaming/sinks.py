@@ -217,19 +217,21 @@ def _gc_unreferenced(path: str, live: dict[str, str], epoch: int) -> None:
 
 def read_upsert_table(
     spark: SparkSession, path: str, buckets: list[int] | None = None
-) -> DataFrame:
+) -> DataFrame | None:
     """Read the committed state of an ``upsert_sink`` table.
 
     Resolves the manifest and scans exactly the referenced bucket-version
     dirs (optionally restricted to ``buckets`` — the merge's by-construction
     partition pruning). Multiple dirs feed ONE parquet relation (a single
     file-index/scan node), so the plan does not grow with bucket count.
+    Returns ``None`` when none of the requested ``buckets`` exist yet.
     """
     man = _read_manifest(path)
     if not man:
         raise FileNotFoundError(f"no committed upsert table at {path}")
     if buckets is not None:
-        man = {b: d for b, d in man.items() if int(b) in set(buckets)}
+        want = set(buckets)
+        man = {b: d for b, d in man.items() if int(b) in want}
     if not man:
         return None  # none of the requested buckets exist yet
     return spark.read.parquet(*(os.path.join(path, d) for d in man.values()))
@@ -276,7 +278,6 @@ def _emit_changelog(
     delivery (``changelog.py`` tracks holes), but ordered delivery keeps
     its hole set empty."""
     dst = os.path.join(path, _CHANGELOG, _epoch_dir(epoch))
-    legacy = os.path.join(path, _CHANGELOG, f"e{epoch}")  # pre-padding name
     val = [c for c in latest.columns if c not in keys and c != _BUCKET]
     n = latest.select(*keys, F.struct(*val).alias("_new"))
     if current is not None:
@@ -288,9 +289,7 @@ def _emit_changelog(
         )
     changed = j.filter(~F.col("_old").eqNullSafe(F.col("_new"))).persist()
     try:
-        if changed.limit(1).count() == 0 and (
-            os.path.isdir(dst) or os.path.isdir(legacy)
-        ):
+        if os.path.isdir(dst) and changed.limit(1).count() == 0:
             return  # post-commit replay: the epoch's pairs already stand
         adds = changed.select(
             *keys, F.col("_new").alias("_row"),
@@ -579,6 +578,28 @@ def partitioned_table_sink(
     return sdf.writeStream.foreachBatch(write).outputMode("append")
 
 
+def _fan_out(
+    batch: DataFrame,
+    rules: dict[str, tuple[str, list[str]]],
+    base_path: str,
+    source_col: str,
+) -> None:
+    """Append each rule's rows of ``batch`` (matched on ``source_col``,
+    pruned to the rule's columns) to ``base_path/<sink_table>``; one
+    cached scan of the batch serves every route."""
+    batch = batch.cache()
+    try:
+        for src, (sink_table, cols) in rules.items():
+            (
+                batch.filter(F.col(source_col) == src)
+                .select(*cols)
+                .write.mode("append")
+                .parquet(f"{base_path}/{sink_table}")
+            )
+    finally:
+        batch.unpersist()
+
+
 def routed_dim_sink(
     sdf: DataFrame,
     rules: dict[str, tuple[str, list[str]]],
@@ -600,17 +621,7 @@ def routed_dim_sink(
     """
 
     def route(batch: DataFrame, _epoch: int) -> None:
-        batch = batch.cache()
-        try:
-            for src, (sink_table, cols) in rules.items():
-                (
-                    batch.filter(F.col("event_type") == src)
-                    .select(*cols)
-                    .write.mode("append")
-                    .parquet(f"{base_path}/{sink_table}")
-                )
-        finally:
-            batch.unpersist()
+        _fan_out(batch, rules, base_path, "event_type")
 
     return sdf.writeStream.foreachBatch(route).outputMode("append")
 
@@ -654,16 +665,6 @@ def dim_app(
             r["source_table"]: (r["sink_table"], r["sink_columns"].split(","))
             for r in cfg.collect()
         }
-        batch = batch.cache()
-        try:
-            for src, (sink_table, cols) in rules.items():
-                (
-                    batch.filter(F.col(source_col) == src)
-                    .select(*cols)
-                    .write.mode("append")
-                    .parquet(f"{base_path}/{sink_table}")
-                )
-        finally:
-            batch.unpersist()
+        _fan_out(batch, rules, base_path, source_col)
 
     return sdf.writeStream.foreachBatch(route).outputMode("append")

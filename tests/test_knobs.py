@@ -1,18 +1,71 @@
-"""The scale knobs must keep Spark plan and DuckDB oracle symmetric.
+"""The env knobs: a pinned set, and each keeps plan and oracle symmetric.
+
+``flink_spark`` reads a fixed set of environment variables (listed in
+README.md, "Scale design"); every other tuning value is a module
+constant. ``test_env_reads_are_the_kept_set`` pins that set, so a new
+knob is added on purpose, with a reason, or not at all.
 
 SCALING.md documents env knobs that widen the banded self-joins as the
 corpus grows (FLINK_SPARK_SIMHASH_BITS / _LSH_BITS / _IVF_CELLS). Their
 contract is that the oracle SQL is rebuilt from the same constants, so
-correctness holds at ANY width — this test re-runs the oracle compare
-at non-default widths in a subprocess (the knobs are read at import
-time, so a fresh interpreter is required).
+correctness holds at ANY width — the tests below re-run the oracle
+compare at non-default widths in a subprocess (the knobs are read at
+import time, so a fresh interpreter is required).
 """
 
 from __future__ import annotations
 
 import os
+import pathlib
+import re
 import subprocess
 import sys
+
+# Every environment variable flink_spark reads, and why it stays a knob.
+_KEPT_ENV = {
+    # 0 selects the fault-tolerant DISK_ONLY persist profile (safety code)
+    "FLINK_SPARK_CUT_LINEAGE",
+    # set by the sweep scripts under scripts/
+    "FLINK_SPARK_STORE_BUCKETS",
+    "FLINK_SPARK_LSH_BANDS",
+    "FLINK_SPARK_PQ_RERANK",
+    "FLINK_SPARK_IVF_PROBES",
+    # set by tests to push the corpus-derived rules out of their default
+    "FLINK_SPARK_SIMHASH_BITS",
+    "FLINK_SPARK_LSH_BITS",
+    "FLINK_SPARK_IVF_CELLS",
+    "FLINK_SPARK_PACK_SHARDS",
+    "FLINK_SPARK_PACK_SHARD_ROWS",
+    "FLINK_SPARK_RECALL_SAMPLE",
+    "FLINK_SPARK_MAX_BUCKET",
+    # deployment settings
+    "FLINK_SPARK_SHUFFLE_PARTITIONS",
+    "SPARK_GRAFT_CPUS",
+    "SPARK_DRIVER_MEM",
+}
+
+
+# an env read with a literal name; any os.environ / os.getenv use this
+# does not match fails the count check below instead of slipping past
+_ENV_READ = re.compile(r'os\.(?:environ\.get\(|environ\[|getenv\()\s*"(\w+)"')
+
+
+def test_env_reads_are_the_kept_set():
+    """The package reads exactly the kept knobs: a new env read fails
+    here until it is added to ``_KEPT_ENV`` (and README's table)."""
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "flink_spark"
+    found: set[str] = set()
+    for path in sorted(pkg.rglob("*.py")):
+        text = path.read_text()
+        names = _ENV_READ.findall(text)
+        assert len(names) == (text.count("os.environ")
+                              + text.count("os.getenv")), path
+        found.update(names)
+    assert found == _KEPT_ENV, (
+        f"new: {sorted(found - _KEPT_ENV)}; "
+        f"gone: {sorted(_KEPT_ENV - found)}"
+    )
+
 
 _SCRIPT = """
 import sys

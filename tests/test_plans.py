@@ -683,11 +683,10 @@ def test_table_profile_single_scan_expand(spark):
 
 def test_table_profile_approx_knob_drops_expand(spark):
     """``table_profile(exact_distinct=False)`` (the production setting
-    at 100 TB, env knob FLINK_SPARK_PROFILE_EXACT=0) must profile in
-    ONE partial-aggregated scan: HLL sketches replace the Expand's
-    5× row multiplication. Counts other than n_distinct stay exact,
-    and the HLL distincts land within the sketch's documented ~2.3%
-    relative error."""
+    at 100 TB) must profile in ONE partial-aggregated scan: HLL
+    sketches replace the Expand's 5× row multiplication. Counts other
+    than n_distinct stay exact, and the HLL distincts land within the
+    sketch's documented ~2.3% relative error."""
     from flink_spark.plans.textops import table_profile
 
     approx = table_profile(spark, SF_DIR, exact_distinct=False)
