@@ -11,6 +11,8 @@ search, text analysis, multimodal plumbing) designed for 100 TB scale.
 Layout
 ------
 - ``session``    : SparkSession factory / tuning knobs.
+- ``commit``     : the atomic pointer commit + retention every stateful
+                   sink's versioned state goes through.
 - ``sources``    : batch readers over the fixture tables + the JDBC
                    dimension snapshot reader.
 - ``functions``  : scalar/text helper functions (exact-decimal sums,

@@ -27,11 +27,11 @@ from a true binlog tail, which needs a real MySQL server and is out of
 sandbox scope (SURVEY §7.3).
 
 State: the committed snapshot lives under ``state_dir/snap-<gen>`` and
-is committed by atomically replacing the ``_SNAPSHOT`` pointer
-(write-temp + ``os.replace`` + fsync — the manifest discipline of
-``upsert_sink``/``compact_store``). A crash between emit and commit
-re-emits the interval on the next poll: at-least-once, downstream
-idempotent consumers (the epoch-dir sinks) absorb the retry.
+is committed through the ``_SNAPSHOT`` pointer (``flink_spark.commit``:
+the previous snapshot is kept, older ones are deleted). A crash
+between emit and commit re-emits the interval on the next poll:
+at-least-once, downstream idempotent consumers (the epoch-dir sinks)
+absorb the retry.
 
 Scale notes: the diff is one partitioned JDBC read + one pk
 full-outer join against the previous snapshot — both sides
@@ -44,7 +44,6 @@ reads just the key column).
 
 from __future__ import annotations
 
-import json
 import os
 import time
 from itertools import chain
@@ -52,22 +51,17 @@ from itertools import chain
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flink_spark.commit import Pointer
+
+_SNAPSHOT = Pointer(
+    "_SNAPSHOT", r"snap-\d+", lambda rec: [f"snap-{rec['gen']}"]
+)
+
 
 def _pointer(state_dir: str) -> dict:
-    try:
-        with open(os.path.join(state_dir, "_SNAPSHOT"), encoding="utf-8") as fh:
-            return json.load(fh)
-    except (FileNotFoundError, json.JSONDecodeError):
-        return {"gen": -1}
-
-
-def _commit(state_dir: str, gen: int) -> None:
-    tmp = os.path.join(state_dir, "_SNAPSHOT.tmp")
-    with open(tmp, "w", encoding="utf-8") as fh:
-        json.dump({"gen": gen}, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.replace(tmp, os.path.join(state_dir, "_SNAPSHOT"))
+    """The committed ``{"gen": n}``; gen -1 before the first poll. A
+    pointer that does not parse raises instead of re-bootstrapping."""
+    return _SNAPSHOT.read(state_dir) or {"gen": -1}
 
 
 class JdbcCdcCapture:
@@ -133,7 +127,8 @@ class JdbcCdcCapture:
         ts = int(time.time())
         cur = self._read_current()
         cols = cur.columns
-        prev = self._snapshot(_pointer(self.state_dir)["gen"])
+        committed = _pointer(self.state_dir)
+        prev = self._snapshot(committed["gen"])
 
         def as_map(side: str):
             return F.create_map(
@@ -186,7 +181,7 @@ class JdbcCdcCapture:
                     F.lit(ts).alias("ts"),
                 )
             )
-        gen = _pointer(self.state_dir)["gen"] + 1
+        gen = committed["gen"] + 1
         # envelope write materializes env (it still reads the OLD
         # snapshot lazily) before the snapshot dirs change
         env.write.mode("overwrite").parquet(
@@ -195,7 +190,7 @@ class JdbcCdcCapture:
         cur.write.mode("overwrite").parquet(
             os.path.join(self.state_dir, f"snap-{gen}")
         )
-        _commit(self.state_dir, gen)
+        _SNAPSHOT.commit(self.state_dir, {"gen": gen}, committed)
         return self.spark.read.parquet(os.path.join(out_dir, f"epoch={gen}"))
 
     def current(self) -> DataFrame | None:

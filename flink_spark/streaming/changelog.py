@@ -59,16 +59,16 @@ test_changelog_agg_retractions_are_load_bearing`` pins the difference.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flink_spark.commit import Pointer
 from flink_spark.streaming.sinks import (
     _CHANGELOG,
-    _MANIFEST,
+    _MANIFEST_PTR,
     _epoch_dir,
     read_changelog,
     read_upsert_table,
@@ -104,74 +104,47 @@ def changelog_stream(spark: SparkSession, table: str) -> DataFrame:
     )
 
 
-def _read_state_meta(path: str) -> dict:
-    try:
-        with open(os.path.join(path, _STATE_MANIFEST)) as f:
-            return json.load(f)
-    except FileNotFoundError:
-        return {}
-
-
-def _commit_state(
-    path: str, version: str, applied: int,
-    missing: list[int], commit: int,
-) -> None:
-    """Atomic pointer swap, same protocol as ``sinks._commit_manifest``.
-
-    ``missing`` records the HOLES below the ``applied`` watermark:
-    epochs that have not been folded yet even though a higher epoch
-    has. With zero-padded epoch dirs the file source delivers in epoch
-    order and the set stays empty; it exists so that out-of-order
-    delivery (mtime collisions, restored tables) degrades to *late*
-    folding instead of silent loss.
-    """
-    tmp = os.path.join(path, f".{_STATE_MANIFEST}.{commit}.tmp")
-    with open(tmp, "w") as f:
-        json.dump(
-            {
-                "applied": applied,
-                "missing": sorted(missing),
-                "version": version,
-                "commit": commit,
-            },
-            f,
-        )
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, os.path.join(path, _STATE_MANIFEST))
+# ``missing`` records the HOLES below the ``applied`` watermark: epochs
+# not folded yet though a higher one has. It stays empty under in-order
+# delivery; out-of-order delivery (mtime collisions, restored tables)
+# then degrades to *late* folding instead of silent loss.
+_STATE = Pointer(_STATE_MANIFEST, r"v\d+", lambda rec: [rec["version"]])
 
 
 def _write_state(
     state_path: str, merged: DataFrame, applied: int,
     missing: list[int] = (),
 ) -> None:
-    """Write the next state version, commit, GC superseded dirs.
+    """Write the next state version and commit it (``flink_spark.commit``:
+    the previous version is kept for readers that resolved it).
 
     Versions are named by a monotonic commit counter (NOT by
     ``applied`` — a late-arriving hole epoch changes state without
-    raising the watermark). GC keeps the previous committed version as
-    a one-version retention window, so a reader that resolved the
-    prior manifest can finish its scan while a new version commits;
-    only versions at least two commits old are removed.
+    raising the watermark).
     """
     os.makedirs(state_path, exist_ok=True)
-    meta = _read_state_meta(state_path)
-    keep = meta.get("version")
-    commit = meta.get("commit", 0) + 1
+    meta = _STATE.read(state_path)
+    commit = meta["commit"] + 1 if meta else 1
     version = f"v{commit:09d}"
     dst = os.path.join(state_path, version)
     if os.path.isdir(dst):  # debris from a crashed identical attempt
         shutil.rmtree(dst)
     merged.write.parquet(dst)
-    _commit_state(state_path, version, applied, list(missing), commit)
-    for name in os.listdir(state_path):
-        if name.startswith("v") and name not in (version, keep):
-            shutil.rmtree(os.path.join(state_path, name), ignore_errors=True)
+    _STATE.commit(
+        state_path,
+        {
+            "applied": applied,
+            "missing": sorted(missing),
+            "version": version,
+            "commit": commit,
+        },
+        meta,
+    )
 
 
 def read_agg_state(spark: SparkSession, path: str) -> DataFrame | None:
     """Committed aggregate state (group cols + ``{c}_sum`` + ``row_ct``)."""
-    meta = _read_state_meta(path)
+    meta = _STATE.read(path)
     if not meta:
         return None
     return spark.read.parquet(os.path.join(path, meta["version"]))
@@ -198,9 +171,8 @@ def init_agg_state(
     Run it while the producer is idle (between micro-batches): the
     manifest read and the bucket-dir scan must see the same commit.
     """
-    with open(os.path.join(table, _MANIFEST)) as f:
-        applied = json.load(f)["epoch"]
-    tbl = read_upsert_table(spark, table)
+    tbl = read_upsert_table(spark, table)  # raises if nothing committed
+    applied = _MANIFEST_PTR.read(table)["epoch"]
     if derive is not None:
         tbl = derive(tbl)
     merged = tbl.groupBy(*group_cols).agg(
@@ -323,7 +295,7 @@ def _fold_changelog_batch(
     bound and the strict ``row_ct != 0`` prune re-engages.
     """
     spark = batch.sparkSession
-    meta = _read_state_meta(state_path)
+    meta = _STATE.read(state_path)
     applied = meta.get("applied", -1) if meta else -1
     missing = meta.get("missing", []) if meta else []
     # producer-epoch watermark + hole set: whatever re-delivery

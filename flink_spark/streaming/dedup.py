@@ -52,10 +52,10 @@ with an old id).
 
 from __future__ import annotations
 
-import json
 import os
 import re
 
+from flink_spark.commit import Pointer
 from flink_spark.sources import local_df
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -113,11 +113,9 @@ _BUCKET_KEY = {
 }
 
 # Bucket count for compacted bases. At 100 TB size this to the store
-# (buckets ≈ store bytes / target file size, thousands); the default
-# suits the local harness. 0 disables bucketing (plain parquet base —
-# the pre-r13 layout, kept readable and used as the SCALING.md
-# before/after control).
-STORE_BUCKETS = int(os.environ.get("FLINK_SPARK_STORE_BUCKETS", "16"))
+# (buckets ≈ store bytes / target file size, thousands); 16 suits the
+# local harness.
+STORE_BUCKETS = 16
 
 # Default in-stream auto-compaction cadence for every run_*_stream: the
 # epoch tail (small files + the plain leg of every store-side join) is
@@ -128,16 +126,17 @@ STORE_BUCKETS = int(os.environ.get("FLINK_SPARK_STORE_BUCKETS", "16"))
 DEFAULT_COMPACT_EVERY = 16
 
 
+_COMPACTED = Pointer(
+    "_COMPACTED", r"base-\d+", lambda rec: [f"base-{rec['base']}"]
+)
+
+
 def _marker(path: str) -> dict:
-    """{"through": m, "base": n} — epochs ≤ m live in base-n. Bucketed
-    bases (r13+) additionally carry {"buckets": b, "key": k} so a
-    fresh session can re-register the catalog table from the marker
-    alone."""
-    try:
-        with open(os.path.join(path, "_COMPACTED"), encoding="utf-8") as fh:
-            return json.load(fh)
-    except (FileNotFoundError, json.JSONDecodeError):
-        return {"through": -1, "base": -1}
+    """{"through": m, "base": n} — epochs ≤ m live in base-n (base -1
+    before the first compaction). Bucketed bases additionally carry
+    {"buckets": b, "key": k} so a fresh session can re-register the
+    catalog table from the marker alone. A garbled marker raises."""
+    return _COMPACTED.read(path) or {"through": -1, "base": -1}
 
 
 def _table_ident(path: str, gen: int) -> str:
@@ -156,7 +155,7 @@ def _base_df(
     """The compacted base as a DataFrame — through the catalog (with
     bucket metadata, re-registering after a session restart) when the
     marker says the base was written bucketed, else a plain path read
-    (pre-r13 bases, or STORE_BUCKETS=0)."""
+    (tables with no probe key, e.g. the ``conflicts`` ledgers)."""
     base = os.path.join(path, f"base-{mark['base']}")
     if mark.get("buckets") and mark.get("key"):
         tbl = _table_ident(path, mark["base"])
@@ -238,12 +237,12 @@ def _commit_base(
 ) -> None:
     """The store's single pointer-commit primitive: materialize ``df``
     as ``base-(mark.base+1)`` (a fresh directory — the lineage may read
-    the table being replaced), commit by atomically swapping the
-    ``_COMPACTED`` marker to ``(through, new base)`` (write-temp +
-    fsync + ``os.replace``, the same discipline as ``upsert_sink``'s
-    manifest), then GC the folded ``epochs`` dirs and the superseded
-    base. Shared by ``compact_store`` and ``_replace_table`` so the
-    crash-safety-critical sequence exists exactly once.
+    the table being replaced), commit it by swapping the ``_COMPACTED``
+    marker to ``(through, new base)`` through ``flink_spark.commit``
+    (which keeps the previous base and deletes older ones), then delete
+    the folded ``epochs`` dirs. Shared by ``compact_store`` and
+    ``_replace_table`` so the crash-safety-critical sequence exists
+    exactly once.
 
     Crash safety: before the marker lands, readers still resolve the
     old base + epochs (the half-written new base is invisible); after
@@ -251,19 +250,17 @@ def _commit_base(
     deletion finished (``_store`` filters ≤ through), so the GC is
     plain idempotent.
 
-    r13: when the table has a probe key (``_BUCKET_KEY``) and
-    ``STORE_BUCKETS`` > 0, the new base is written hash-clustered on
-    that key as an external bucketed catalog table at the same
-    ``base-N`` directory (bucket metadata only exists through the
-    catalog). ``repartition(buckets, key)`` aligns writer partitions
-    with bucket ids so every bucket is ONE file — the regime where
-    Spark trusts the within-bucket sort and the per-batch
+    When the table has a probe key (``_BUCKET_KEY``) the new base is
+    written hash-clustered on that key as an external bucketed catalog
+    table at the same ``base-N`` directory (bucket metadata only exists
+    through the catalog). ``repartition(buckets, key)`` aligns writer
+    partitions with bucket ids so every bucket is ONE file — the regime
+    where Spark trusts the within-bucket sort and the per-batch
     SortMergeJoin needs neither Exchange nor Sort on the store side.
     A crashed-then-retried compaction reuses the same generation
     (``mark`` unchanged until the marker lands), and saveAsTable's
     overwrite replaces both the half-written files and the orphan
-    catalog entry. The marker commit is byte-identical to before plus
-    the bucket metadata — the pointer-commit contract is unchanged.
+    catalog entry.
     """
     import shutil
 
@@ -271,9 +268,9 @@ def _commit_base(
     key = _BUCKET_KEY.get(os.path.basename(path))
     base_dir = os.path.join(path, f"base-{gen}")
     marker = {"through": through, "base": gen}
-    if key is not None and STORE_BUCKETS > 0:
+    spark = df.sparkSession
+    if key is not None:
         tbl = _table_ident(path, gen)
-        spark = df.sparkSession
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
         shutil.rmtree(base_dir, ignore_errors=True)  # crashed prior try
         (
@@ -287,30 +284,11 @@ def _commit_base(
         marker.update({"buckets": STORE_BUCKETS, "key": key})
     else:
         df.write.mode("overwrite").parquet(base_dir)
-    tmp = os.path.join(path, "_COMPACTED.tmp")
-    with open(tmp, "w", encoding="utf-8") as fh:
-        json.dump(marker, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.replace(tmp, os.path.join(path, "_COMPACTED"))
+    for old in _COMPACTED.commit(path, marker, mark):
+        gen_old = int(old.split("-", 1)[1])
+        spark.sql(f"DROP TABLE IF EXISTS {_table_ident(path, gen_old)}")
     for e in epochs:
         shutil.rmtree(os.path.join(path, f"epoch={e}"), ignore_errors=True)
-    # GC every superseded base generation, not just the immediate
-    # predecessor: a crash between the marker swap and this sweep would
-    # otherwise leak base-(gen-1) (and its catalog entry) forever,
-    # because later compactions only knew their own predecessor. Like
-    # the epoch debris above, anything below the marker's generation is
-    # ignored by readers and safe to collect idempotently.
-    for e in os.listdir(path):
-        if not e.startswith("base-"):
-            continue
-        old = int(e.split("-", 1)[1])
-        if old >= gen:
-            continue
-        shutil.rmtree(os.path.join(path, e), ignore_errors=True)
-        df.sparkSession.sql(
-            f"DROP TABLE IF EXISTS {_table_ident(path, old)}"
-        )
 
 
 # Bucketed parquet part files carry their bucket id as the `_NNNNN`
@@ -1030,10 +1008,9 @@ def compact_store(
     stream; every batch's store read then opens thousands of small
     files. Compaction rewrites the live state (current base + the
     folded epoch dirs) as a single ``base-<g+1>`` directory — bucketed
-    on the table's probe key, see ``_commit_base`` — and commits it by
-    atomically replacing the ``_COMPACTED`` marker (write-temp +
-    ``os.replace`` + fsync — the same pointer-commit discipline as
-    ``upsert_sink``'s manifest), then deletes the folded epoch dirs.
+    on the table's probe key — and commits it through ``_commit_base``
+    (the ``_COMPACTED`` pointer, ``flink_spark.commit``), then deletes
+    the folded epoch dirs.
 
     Crash safety: before the marker lands, readers still resolve the
     old base + epochs (the half-written new base is invisible); after
@@ -1122,15 +1099,15 @@ def _pinned_config(
     Geometry knobs (semantic-dedup cell count, split-store band width)
     are functions the store's keys were built with; a restarted stream
     that silently changed one would make old state and new arrivals
-    incomparable. First run writes the value (atomic tmp+fsync+replace
-    — the manifest-commit discipline); every later run must match it
-    or pass ``None`` to adopt it.
+    incomparable. First run commits the value as a pointer record
+    (``flink_spark.commit``); every later run must match it or pass
+    ``None`` to adopt it.
     """
     os.makedirs(store_dir, exist_ok=True)
-    path = os.path.join(store_dir, fname)
-    if os.path.exists(path):
-        with open(path, encoding="utf-8") as fh:
-            got = json.load(fh)[key]
+    pin = Pointer(fname)
+    rec = pin.read(store_dir)
+    if rec is not None:
+        got = rec[key]
         if value is not None and value != got:
             raise ValueError(
                 f"store was built with {key}={got}, asked for {value}; "
@@ -1139,12 +1116,7 @@ def _pinned_config(
         return got
     if value is None:
         raise ValueError(f"{key} is required when creating a new store")
-    tmp = path + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        json.dump({key: value}, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.replace(tmp, path)
+    pin.commit(store_dir, {key: value})
     return value
 
 

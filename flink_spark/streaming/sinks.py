@@ -18,13 +18,14 @@ shapes:
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from flink_spark.commit import Pointer
 
 
 def kafka_payload(df: DataFrame, key_col: str, value_cols: list[str]) -> DataFrame:
@@ -168,51 +169,18 @@ def _epoch_dir(epoch: int) -> str:
     return f"e{int(epoch):012d}"
 
 
+# THE commit point of an upsert table: readers resolve bucket dirs
+# through the manifest, never by listing, so they see either the
+# pre-commit or the post-commit bucket set — never a mix.
+_MANIFEST_PTR = Pointer(
+    _MANIFEST, r"b-?\d+_e\d+", lambda rec: rec["buckets"].values()
+)
+
+
 def _read_manifest(path: str) -> dict[str, str]:
     """bucket-id (str) → current versioned dir name; {} if no commit yet."""
-    try:
-        with open(os.path.join(path, _MANIFEST)) as f:
-            return json.load(f)["buckets"]
-    except FileNotFoundError:
-        return {}
-
-
-def _commit_manifest(path: str, buckets: dict[str, str], epoch: int) -> None:
-    """THE commit point: one atomic pointer-file replace.
-
-    ``os.replace`` of a same-directory temp file is atomic on POSIX, so
-    a reader resolves either the old manifest (old complete bucket set)
-    or the new one — never a mix, never a missing bucket. This is the
-    local-FS miniature of an Iceberg/Delta commit (data files written
-    versioned + immutable, then a single pointer swap); on an object
-    store the same role is played by the transaction-log object.
-    """
-    tmp = os.path.join(path, f".{_MANIFEST}.{epoch}.tmp")
-    with open(tmp, "w") as f:
-        json.dump({"epoch": epoch, "buckets": buckets}, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, os.path.join(path, _MANIFEST))
-
-
-def _gc_unreferenced(path: str, live: dict[str, str], epoch: int) -> None:
-    """Drop bucket versions superseded by the just-committed manifest,
-    stale staging dirs, and debris from crashed epochs.
-
-    Anything not named by the manifest is invisible to readers (they
-    resolve dirs through the manifest, never by listing), so deletion
-    here is housekeeping, not correctness. A long-running concurrent
-    reader that resolved the *previous* manifest keeps its open files
-    on POSIX; production object stores would vacuum with a retention
-    window instead of immediately.
-    """
-    keep = set(live.values())
-    for name in os.listdir(path):
-        full = os.path.join(path, name)
-        if name.startswith("b") and "_e" in name and name not in keep:
-            shutil.rmtree(full, ignore_errors=True)
-        elif name.startswith("_stage_") and name != f"_stage_{epoch}":
-            shutil.rmtree(full, ignore_errors=True)
+    man = _MANIFEST_PTR.read(path)
+    return man["buckets"] if man else {}
 
 
 def read_upsert_table(
@@ -334,12 +302,14 @@ def upsert_sink(
     num_buckets)``): read exactly those buckets' current version dirs,
     union the batch, keep per key the row with the greatest
     ``order_cols``, write new *versioned* bucket dirs, and commit by
-    atomically replacing a single manifest pointer file. Readers
-    (``read_upsert_table``) resolve dirs through the manifest, so they
-    see either the pre-commit or post-commit table — never a partial
-    swap, and a crash at any point leaves only unreferenced debris that
-    the next epoch garbage-collects. Flink emits retraction pairs that
-    upsert-kafka compacts; Spark reaches the same *final table* (the
+    atomically replacing a single manifest pointer file
+    (``flink_spark.commit``). Readers (``read_upsert_table``) resolve
+    dirs through the manifest, so they see either the pre-commit or
+    post-commit table — never a partial swap; the commit keeps the
+    previous manifest's bucket versions, so a reader that resolved it
+    can still run, and a crash at any point leaves only unreferenced
+    debris that the next epoch garbage-collects. Flink emits retraction
+    pairs that upsert-kafka compacts; Spark reaches the same *final table* (the
     property the reference's downstream relies on — SURVEY.md O10/A5)
     with per-batch work proportional to the touched buckets, not the
     whole table. ``changelog=True`` additionally emits those pairs for
@@ -377,10 +347,10 @@ def upsert_sink(
     scheme).
     """
     if "://" in path or path.startswith("file:"):
-        # object-store / non-local paths: the manifest commit's
-        # os.rename/os.replace don't apply — dispatch to the Delta
-        # MERGE INTO form, whose transaction log provides the same
-        # atomic-pointer commit natively.
+        # object-store / non-local paths: the manifest commit's local
+        # renames don't apply — dispatch to the Delta MERGE INTO form,
+        # whose transaction log provides the same atomic-pointer commit
+        # natively.
         if changelog:
             raise ValueError(
                 "changelog emission is a feature of the local manifest "
@@ -394,8 +364,9 @@ def upsert_sink(
         raise ValueError(
             f"upsert_sink path {path!r} is not a local filesystem path and "
             "delta-spark is not installed: the manifest commit needs "
-            "os.rename/os.replace. Install delta-spark (public package) for "
-            "the MERGE INTO form, or mount the store as a local path."
+            "local filesystem renames. Install delta-spark (public "
+            "package) for the MERGE INTO form, or mount the store as a "
+            "local path."
         )
     spark = sdf.sparkSession
     # a NULL in any key column maps to a NULL bucket id, which the merge
@@ -432,8 +403,8 @@ def upsert_sink(
             if not touched:
                 return
             os.makedirs(path, exist_ok=True)
-            manifest = _read_manifest(path)
-            current = read_upsert_table(spark, path, touched) if manifest else None
+            prev = _MANIFEST_PTR.read(path)
+            current = read_upsert_table(spark, path, touched) if prev else None
             if current is not None:
                 current = current.withColumn(_BUCKET, bucket_of)
                 allrows = current.unionByName(b)
@@ -451,7 +422,7 @@ def upsert_sink(
             # invisible both to the manifest and to Spark's file index
             staging = os.path.join(path, f"_stage_{epoch}")
             latest.write.mode("overwrite").partitionBy(_BUCKET).parquet(staging)
-            committed = dict(manifest)
+            committed = dict(prev["buckets"]) if prev else {}
             for t in touched:
                 src = os.path.join(staging, f"{_BUCKET}={t}")
                 if not os.path.isdir(src):
@@ -462,9 +433,13 @@ def upsert_sink(
                     shutil.rmtree(dst)
                 os.rename(src, dst)
                 committed[str(t)] = version
-            _commit_manifest(path, committed, epoch)
-            shutil.rmtree(staging, ignore_errors=True)
-            _gc_unreferenced(path, committed, epoch)
+            _MANIFEST_PTR.commit(
+                path, {"epoch": epoch, "buckets": committed}, prev
+            )
+            # this epoch's staging dir and any a crashed epoch left
+            for name in os.listdir(path):
+                if name.startswith("_stage_"):
+                    shutil.rmtree(os.path.join(path, name), ignore_errors=True)
         finally:
             b.unpersist()
             if changelog and latest is not None:

@@ -6,8 +6,10 @@ Run: python scripts/gen_catalog_doc.py  (rewrites OPERATORS.md)
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 
 def main() -> None:
@@ -57,7 +59,7 @@ def main() -> None:
         lines.append(
             f"| {code} | {impl} | {', '.join(f'`{x}`' for x in ev) or '—'} |"
         )
-    with open("/root/repo/OPERATORS.md", "w") as f:
+    with open(REPO / "OPERATORS.md", "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote OPERATORS.md: {len(qs)} queries, {len(JOBS)} jobs")
 

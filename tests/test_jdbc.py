@@ -212,6 +212,11 @@ def test_jdbc_cdc_capture_full_cycle(spark, tmp_path):
 
     # a poll with no changes emits nothing
     assert cap.poll(out).count() == 0
+    # retention: the current and the previous snapshot remain
+    import os
+
+    snaps = [e for e in os.listdir(tmp_path / "state") if e.startswith("snap-")]
+    assert sorted(snaps) == ["snap-1", "snap-2"]
 
     # the epoch dirs replay as a stream in the envelope schema
     sdf = cap.envelope_stream(out)

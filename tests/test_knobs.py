@@ -26,7 +26,6 @@ _KEPT_ENV = {
     # 0 selects the fault-tolerant DISK_ONLY persist profile (safety code)
     "FLINK_SPARK_CUT_LINEAGE",
     # set by the sweep scripts under scripts/
-    "FLINK_SPARK_STORE_BUCKETS",
     "FLINK_SPARK_LSH_BANDS",
     "FLINK_SPARK_PQ_RERANK",
     "FLINK_SPARK_IVF_PROBES",

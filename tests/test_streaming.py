@@ -1288,6 +1288,29 @@ def _phased_producer(spark, tmp_path):
     return table, produce
 
 
+def test_upsert_sink_keeps_previous_version_for_readers(spark, tmp_path):
+    """Spark lists a table's files when it plans and opens them when a
+    task runs, so a reader that resolved manifest N must still find its
+    files after manifest N+1 commits. Versions older than the previous
+    manifest are swept."""
+    import os
+
+    from flink_spark.streaming.sinks import _read_manifest
+
+    table, produce = _phased_producer(spark, tmp_path)
+    produce(0, 1)
+    old = read_upsert_table(spark, table)
+    n0 = old.count()
+    produce(1, 2)
+    assert old.count() == n0
+    prev = _read_manifest(table)
+    produce(2, 3)
+    live = set(prev.values()) | set(_read_manifest(table).values())
+    on_disk = {e for e in os.listdir(table)
+               if e.startswith("b") and "_e" in e}
+    assert on_disk <= live
+
+
 def _run_consumer(spark, table, state, ckpt):
     from flink_spark.streaming import changelog_agg_stream
 
